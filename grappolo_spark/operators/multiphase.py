@@ -95,6 +95,25 @@ def _renumber_np(vs, cs):
     return new_c, len(cu)
 
 
+def _coarsen_np(assign_np, e_si, e_di, e_w, k):
+    """Array core of the driver-side coarsen: the same aggregated multiset
+    as :func:`coarsen` — summed (csrc, cdst) pairs plus a zero-weight
+    self-loop placeholder for every cluster without one — as
+    ``(src, dst, weight)`` arrays."""
+    import numpy as np
+
+    key = assign_np[e_si] * np.int64(k) + assign_np[e_di]
+    uk, uinv = np.unique(key, return_inverse=True)
+    nw = np.bincount(uinv, weights=e_w)
+    cs_, cd_ = (uk // k).astype(np.int64), (uk % k).astype(np.int64)
+    missing = np.setdiff1d(np.arange(k, dtype=np.int64), cs_[cs_ == cd_])
+    return (
+        np.concatenate([cs_, missing]),
+        np.concatenate([cd_, missing]),
+        np.concatenate([nw, np.zeros(len(missing))]),
+    )
+
+
 def renumber_contiguously(
     assign: DataFrame,
     size_hint: int | None = None,
@@ -463,7 +482,6 @@ def louvain(
                     res.assignment, size_hint=nv
                 )
         if np_cont:
-            import numpy as np
             import pandas as pd
 
             from grappolo_spark.operators.louvain import _local_tail_np
@@ -499,22 +517,12 @@ def louvain(
                     total_iterations=tot_itr,
                     phase_history=history,
                 )
-            # numpy coarsen — same aggregated multiset as coarsen():
-            # summed (csrc, cdst) pairs plus a zero-weight self-loop
-            # placeholder for every cluster without one
             k = num_clusters
-            ns, nd = assign_np[e_si], assign_np[e_di]
-            key = ns * np.int64(k) + nd
-            uk, uinv = np.unique(key, return_inverse=True)
-            nw = np.bincount(uinv, weights=e_w)
-            cs_, cd_ = (uk // k).astype(np.int64), (uk % k).astype(np.int64)
-            missing = np.setdiff1d(
-                np.arange(k, dtype=np.int64), cs_[cs_ == cd_]
-            )
-            ts = np.concatenate([cs_, missing])
-            td = np.concatenate([cd_, missing])
-            tw = np.concatenate([nw, np.zeros(len(missing))])
+            ts, td, tw = _coarsen_np(assign_np, e_si, e_di, e_w, k)
             next_colored = coloring and k > min_graph_size
+            # len(ts) counts the placeholder self-loops, as the normal
+            # flow's use_local gate counts coarsen()'s rows: both routes
+            # pick the same machinery at every local_threshold
             if not next_colored and len(ts) <= local_threshold:
                 phase += 1
                 (
@@ -589,11 +597,14 @@ def louvain(
                     # task-scheduling overhead, not the data, is the
                     # phase cost.
                     coarse_edges = coarse_edges.coalesce(4)
+                # the cut keeps row multiplicity, so coarsen()'s deduped
+                # flag stays valid
                 cur_g = Graph(
                     edges=cut_lineage(
                         coarse_edges, tag="coarse_edges", keep_last=2
                     ),
                     directed=cur_g.directed,
+                    deduped=cur_g.deduped,
                 )
             phase += 1
         else:

@@ -27,9 +27,65 @@ from grappolo_spark.plans.iteration import (
     promote_result,
 )
 
+# edge-row bound of the collect-once driver route: the same default as the
+# local_threshold of connected_components and label_propagation
+_LOCAL_EDGE_ROWS_MAX = 2_000_000
+
 # test hook: force the committed-state distributed loop even when the
-# driver-held-rank fast path would apply
+# collect-once driver route would apply
 _NP_RANK_LOOP = True
+
+
+def _rank_index(ids, keys, what: str):
+    """Positions of ``keys`` in the sorted, non-empty id array ``ids``.
+    Raises when a key is not in ``ids``: a silent misindex would corrupt
+    the ranks."""
+    import numpy as np
+
+    idx = np.minimum(np.searchsorted(ids, keys), len(ids) - 1)
+    bad = ids[idx] != keys
+    if bool(bad.any()):
+        raise ValueError(
+            f"pagerank: {int(bad.sum())} {what} id(s) are not in the "
+            f"vertex set (first: {int(keys[bad][0])})"
+        )
+    return idx
+
+
+def _local_ranks(spark, base, edges, n, alpha, max_iters, unweighted):
+    """Run every superstep on the driver over one Arrow collect of the
+    dst-partitioned ``edges`` cache. The caller has checked that the graph
+    has no dangling vertex and at most ``_LOCAL_EDGE_ROWS_MAX`` edge rows."""
+    import numpy as np
+    import pandas as pd
+
+    bp = base.select("v", "wout").toPandas()
+    wout_b = bp["wout"].to_numpy(np.float64)
+    ids, base_i = np.unique(bp["v"].to_numpy(np.int64), return_inverse=True)
+    if len(ids) != len(base_i) or len(ids) != n:
+        raise ValueError(
+            f"pagerank: {len(base_i)} base rows over {len(ids)} distinct "
+            f"ids, expected {n} distinct vertices"
+        )
+    wout = np.empty(n, dtype=np.float64)
+    wout[base_i] = wout_b
+
+    ep = edges.toPandas()
+    src_i = _rank_index(ids, ep["src"].to_numpy(np.int64), "edge src")
+    dst_i = _rank_index(ids, ep["dst"].to_numpy(np.int64), "edge dst")
+    wout_src = wout[src_i]
+    w = None if unweighted else ep["weight"].to_numpy(np.float64)
+    del ep
+    rank = np.full(n, 1.0 / n, dtype=np.float64)
+    for _ in range(max_iters):
+        c = rank[src_i] / wout_src if unweighted else rank[src_i] * w / wout_src
+        in_c = np.bincount(dst_i, weights=c, minlength=n)
+        # the loop's "+ dangling / n" term adds 0.0 here, an exact no-op
+        # on these non-negative sums
+        rank = (1.0 - alpha) / n + alpha * in_c
+    return spark.createDataFrame(
+        pd.DataFrame({"v": ids, "rank": rank}), "v long, rank double"
+    )
 
 
 def pagerank(
@@ -52,6 +108,10 @@ def pagerank(
       table broadcasts, the edge table is hash-partitioned by ``dst``
       once, and the contribution groupBy(dst) reuses that layout — the
       superstep moves ZERO edge rows over the network/shuffle disk.
+      Below ``_LOCAL_EDGE_ROWS_MAX`` edge rows a dangling-free graph
+      (``tol``/``run_dir``/``ids32`` unset) collects that dst-partitioned
+      table once instead and runs every superstep on the driver in numpy,
+      with bit-identical ranks.
     - **False** (auto beyond the threshold — a billion-vertex rank table
       must not be broadcast): the shuffle-join plan, edges co-partitioned
       on the join key once and reused.
@@ -71,7 +131,11 @@ def pagerank(
     The shuffle path (bucketed long state cuts) never narrows.
     """
     spark = g.edges.sparkSession
-    wout = g.edges.groupBy(F.col("src").alias("v")).agg(F.sum("weight").alias("wout"))
+    # m (out-edge rows per vertex) sizes the driver route's edge collect
+    # without a probe job
+    wout = g.edges.groupBy(F.col("src").alias("v")).agg(
+        F.sum("weight").alias("wout"), F.count(F.lit(1)).alias("m")
+    )
     # a symmetrized table with no explicit vertices lists every vertex as
     # src, so the wout aggregation's key set IS the vertex set: base = wout
     # directly, persisted first so the id-stats agg rides the cache
@@ -84,10 +148,17 @@ def pagerank(
     else:
         verts = g.vertex_ids()
         vstats_src = verts
+    # the driver route's gate over base: edge rows and dangling vertices.
+    # When base is the id-stats source it rides that job.
+    route_stats = [
+        F.sum("m").alias("m"),
+        F.count(F.when(F.col("wout") == 0.0, True)).alias("dangling"),
+    ]
     vstats = vstats_src.agg(
         F.count(F.lit(1)).alias("n"),
         F.min("v").alias("min_id"),
         F.max("v").alias("max_id"),
+        *(route_stats if sym_complete else []),
     ).collect()[0]
     n = vstats["n"]
     if n == 0:
@@ -115,7 +186,7 @@ def pagerank(
         # post-join cast would make v a derived attribute, void the cached
         # partitioning, and re-exchange base every superstep — measured
         # 1.4x SLOWER than the long plan before this ordering fix.
-        wout = wout.select(F.col("v").cast("int").alias("v"), "wout")
+        wout = wout.select(F.col("v").cast("int").alias("v"), "wout", "m")
         if sym_complete:
             # rare explicit-opt-in rebuild: the cast must sit below the
             # persist so the cache carries the int attribute
@@ -126,7 +197,9 @@ def pagerank(
             verts.select(F.col("v").cast("int").alias("v")) if ids32 else verts
         )
         base = verts_b.join(wout, "v", "left").select(
-            "v", F.coalesce("wout", F.lit(0.0)).alias("wout")
+            "v",
+            F.coalesce("wout", F.lit(0.0)).alias("wout"),
+            F.coalesce("m", F.lit(0)).alias("m"),
         ).persist()
     # weight ≡ 1.0 invariant (Graph.unweighted): the superstep cache keeps
     # only (src, dst) — one third less cached/scanned width per superstep —
@@ -151,72 +224,34 @@ def pagerank(
         # already-partitioned cache is reused shuffle-free
         edges = e_loop.persist()
 
-    # driver-held-rank loop (same structure as the louvain small-state
-    # kernels): the per-superstep gather — edges ⋈ broadcast(ranks) →
-    # groupBy(dst) → sum — runs IN SPARK over the dst-partitioned cache
-    # exactly as below (single-stage agg, no exchange, so the per-dst sums
-    # are the same deterministic per-partition reductions), but the O(V)
-    # rank state lives in numpy: one LocalRelation in and one O(V) collect
-    # out per superstep replaces the dangling-scan job, the O(V)
-    # base⋈contribs join and the every-3rd-superstep parquet commit. The
-    # rank update is the identical scalar expression, so ranks are
-    # bit-identical (pinned by test_pagerank_driver_ranks_matches).
-    # Excluded: dangling graphs (their rank-mass reduction would move a
-    # float sum across the boundary), tol (delta is a distributed agg),
-    # run_dir (resume state must stay durable), ids32, and state above
-    # 100k rows — a billion-vertex rank table must never collect.
+    # collect-once driver route (same pattern as the CC and LPA local
+    # paths): the dst-partitioned edge cache comes to the driver ONCE and
+    # every superstep's gather is one np.bincount — no Spark job per
+    # superstep. Ranks are bit-identical to the broadcast loop below (pinned
+    # by test_pagerank_driver_ranks_matches): every dst row lives in one
+    # partition of the cache, the loop's exchange-free sum folds those rows
+    # from 0.0 in scan order, the collect keeps partition order so bincount
+    # folds them from 0.0 in the same order, and the contribution and the
+    # rank update are the same IEEE expressions. Both routes read the one
+    # cache defined above. Excluded: dangling graphs (their rank-mass
+    # reduction would move a float sum across the boundary), tol (delta is
+    # a distributed agg), run_dir (resume state must stay durable), ids32,
+    # and graphs above _LOCAL_EDGE_ROWS_MAX edge rows. Both gates are
+    # checked before anything is collected. A dangling-free graph lists
+    # every vertex as src, so n <= edge rows: the n gate is implied by the
+    # edge bound and spares the generic path its stats job on big graphs.
     if (
         _NP_RANK_LOOP
         and broadcast_ranks
         and not ids32
         and run_dir is None
         and tol is None
-        and n <= 100_000
+        and n <= _LOCAL_EDGE_ROWS_MAX
     ):
-        import numpy as np
-        import pandas as pd
-
-        bp = base.select("v", "wout").toPandas()
-        vs_np = bp["v"].to_numpy(np.int64)
-        wout_np = bp["wout"].to_numpy(np.float64)
-        order = np.argsort(vs_np, kind="stable")
-        vs_np, wout_np = vs_np[order], wout_np[order]
-        if not bool((wout_np == 0.0).any()):
-            rank_np = np.full(n, 1.0 / n, dtype=np.float64)
-            dangling = 0.0
-            contrib_c = (
-                (F.col("rank") / F.col("wout"))
-                if unweighted
-                else (F.col("rank") * F.col("weight") / F.col("wout"))
-            )
-            for _ in range(max_iters):
-                rank_lr = spark.createDataFrame(
-                    pd.DataFrame(
-                        {"v": vs_np, "rank": rank_np, "wout": wout_np}
-                    ),
-                    "v long, rank double, wout double",
-                )
-                cp = (
-                    edges.join(
-                        F.broadcast(rank_lr), edges.src == rank_lr.v
-                    )
-                    .select(F.col("dst").alias("v"), contrib_c.alias("c"))
-                    .groupBy("v")
-                    .agg(F.sum("c").alias("in_contrib"))
-                    .toPandas()
-                )
-                in_c = np.zeros(n, dtype=np.float64)
-                if len(cp):
-                    idx = np.searchsorted(
-                        vs_np, cp["v"].to_numpy(np.int64)
-                    )
-                    in_c[idx] = cp["in_contrib"].to_numpy(np.float64)
-                rank_np = (1.0 - alpha) / n + alpha * (
-                    in_c + dangling / n
-                )
-            out = spark.createDataFrame(
-                pd.DataFrame({"v": vs_np, "rank": rank_np}),
-                "v long, rank double",
+        rs = vstats if sym_complete else base.agg(*route_stats).collect()[0]
+        if rs["dangling"] == 0 and rs["m"] <= _LOCAL_EDGE_ROWS_MAX:
+            out = _local_ranks(
+                spark, base, edges, n, alpha, max_iters, unweighted
             )
             base.unpersist()
             edges.unpersist()

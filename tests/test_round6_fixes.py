@@ -314,12 +314,34 @@ def test_multiphase_colored_np_continuation_matches(spark, monkeypatch):
             assert t_np == t_sp, mgs
 
 
+def _fractional_multipartition_graph(spark):
+    """~22k symmetrized edge rows with fractional weights, cached over 8
+    partitions, so per-dst sums fold rows from several map partitions."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    nv = 2000
+    u = rng.integers(0, nv, 11_000)
+    v = rng.integers(0, nv, 11_000)
+    w = rng.random(11_000) + 0.01
+    ring = np.arange(nv)  # every vertex gets an edge: no dangling vertex
+    pairs = list(zip(u.tolist(), v.tolist(), w.tolist())) + list(
+        zip(ring.tolist(), ((ring + 1) % nv).tolist(), [0.3] * nv)
+    )
+    g = Graph.from_pairs(spark, pairs)
+    edges = g.edges.repartition(8).persist()
+    assert edges.count() > 20_000 and edges.rdd.getNumPartitions() == 8
+    return Graph(edges=edges, directed=g.directed, deduped=g.deduped)
+
+
 def test_pagerank_driver_ranks_matches(spark, monkeypatch):
-    """The driver-held-rank pagerank loop must be bit-identical to the
-    committed-state distributed loop: the gather job is the same plan
-    over the same cache, and the rank update is the same scalar
-    expression. Covers weighted, unweighted and a graph with an
-    explicit-vertex side (non-sym_complete base build)."""
+    """The collect-once driver pagerank route must be bit-identical to the
+    committed-state broadcast loop: bincount folds each dst's rows from
+    0.0 in the dst-partitioned table's order, as the loop's exchange-free
+    sum does, and the contribution and rank update are the same IEEE
+    expressions. Covers weighted, unweighted, fractional weights over
+    several partitions, and a graph with an explicit-vertex side
+    (non-sym_complete base build)."""
     import importlib
 
     from grappolo_spark.sources.fixtures import grid3d, karate
@@ -333,7 +355,8 @@ def test_pagerank_driver_ranks_matches(spark, monkeypatch):
         [(0, 1, 3.0), (1, 2, 2.0), (2, 0, 1.0), (3, 4, 5.0), (4, 5, 4.0),
          (5, 3, 1.0), (2, 3, 1.0), (6, 6, 2.0)],
     )
-    for g in (karate(spark), grid3d(spark, 3, 3, 3), weighted):
+    fractional = _fractional_multipartition_graph(spark)
+    for g in (karate(spark), grid3d(spark, 3, 3, 3), weighted, fractional):
         fast = sorted(
             (r["v"], r["rank"])
             for r in P.pagerank(g, max_iters=5).collect()
@@ -345,6 +368,93 @@ def test_pagerank_driver_ranks_matches(spark, monkeypatch):
         )
         monkeypatch.undo()
         assert fast == slow
+    fractional.edges.unpersist()
+
+
+def test_pagerank_driver_route_jobs_do_not_grow_with_supersteps(spark):
+    """The driver route runs every superstep in numpy: its Spark job count
+    must not depend on max_iters, so a per-superstep job cannot return
+    unnoticed."""
+    import importlib
+
+    from grappolo_spark.sources.fixtures import karate
+
+    P = importlib.import_module("grappolo_spark.operators.pagerank")
+    g = karate(spark)
+    sc = spark.sparkContext
+
+    def jobs(max_iters):
+        group = f"pagerank-route-guard-{max_iters}"
+        sc.setJobGroup(group, group)
+        try:
+            P.pagerank(g, max_iters=max_iters).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs(1)  # first call materializes the fixture's cached edges
+    few, many = jobs(2), jobs(12)
+    assert few == many, (few, many)
+    assert few > 0
+
+
+def test_pagerank_driver_route_gate_checks_before_collecting(spark, monkeypatch):
+    """The driver route's edge-row and dangling gates come from aggregates,
+    so a graph that fails them never reaches the route's collects. Covers
+    both base builds: the symmetrized one (the gate rides the id-stats
+    job) and the explicit-vertex one (its own stats job)."""
+    import importlib
+
+    from grappolo_spark.sources.fixtures import karate
+
+    P = importlib.import_module("grappolo_spark.operators.pagerank")
+    g = karate(spark)
+    verts = g.vertex_ids()
+    with_isolated = Graph(
+        edges=g.edges,
+        vertices=verts.union(spark.createDataFrame([(99,)], "v long")),
+    )
+    cases = [
+        (g, 2_000_000, True),
+        (Graph(edges=g.edges, vertices=verts), 2_000_000, True),
+        (with_isolated, 2_000_000, False),  # dangling vertex 99
+        (g, 155, False),  # karate has 156 edge rows
+        (Graph(edges=g.edges, vertices=verts), 155, False),
+    ]
+    local = P._local_ranks
+    for gc, bound, routed in cases:
+        calls = []
+
+        def spy(*a, **kw):
+            calls.append(1)
+            return local(*a, **kw)
+
+        monkeypatch.setattr(P, "_local_ranks", spy)
+        monkeypatch.setattr(P, "_LOCAL_EDGE_ROWS_MAX", bound)
+        fast = sorted(map(tuple, P.pagerank(gc, max_iters=4).collect()))
+        monkeypatch.undo()
+        assert bool(calls) == routed, (bound, routed)
+        if routed:
+            monkeypatch.setattr(P, "_NP_RANK_LOOP", False)
+            slow = sorted(map(tuple, P.pagerank(gc, max_iters=4).collect()))
+            monkeypatch.undo()
+            assert fast == slow
+
+
+def test_pagerank_rank_index_rejects_unknown_ids():
+    import importlib
+
+    import numpy as np
+
+    P = importlib.import_module("grappolo_spark.operators.pagerank")
+    ids = np.array([2, 5, 9], dtype=np.int64)
+    assert P._rank_index(ids, np.array([9, 2, 5, 5]), "dst").tolist() == [
+        2, 0, 1, 1,
+    ]
+    for bad in ([3], [10], [1]):
+        with pytest.raises(ValueError, match="dst id"):
+            P._rank_index(ids, np.array(bad, dtype=np.int64), "dst")
 
 
 def test_multiphase_colored_big_edge_fallback_matches(spark, monkeypatch):
@@ -426,3 +536,124 @@ def test_deduped_graph_skips_pair_distinct(spark):
         got = sorted(map(tuple, fn(g).collect()))
         want = sorted(map(tuple, fn(g_raw).collect()))
         assert got == want, fn
+
+
+def test_coarse_rebuild_keeps_deduped(spark, monkeypatch):
+    """The coarse graph multiphase rebuilds over the lineage cut keeps
+    coarsen()'s deduped flag: the cut does not change row multiplicity."""
+    from grappolo_spark.operators import multiphase as M
+    from grappolo_spark.sources.fixtures import karate
+
+    seen = []
+    kernel = M.louvain_one_phase
+
+    class _Stop(Exception):
+        pass
+
+    def spy(g, **kw):
+        seen.append(g.deduped)
+        if len(seen) == 2:  # phase 2's input is the rebuilt coarse graph
+            raise _Stop
+        return kernel(g, **kw)
+
+    monkeypatch.setattr(M, "louvain_one_phase", spy)
+    with pytest.raises(_Stop):
+        M.louvain(karate(spark), max_phases=3, local_threshold=0)
+    assert seen == [True, True]
+
+
+def test_coarsen_np_matches_spark_coarsen(spark):
+    """The driver continuation's numpy coarsen yields coarsen()'s rows:
+    summed cluster pairs plus a zero-weight placeholder self-loop for
+    every cluster without an internal edge."""
+    import numpy as np
+
+    from grappolo_spark.operators.multiphase import _coarsen_np, coarsen
+    from grappolo_spark.sources.fixtures import karate
+
+    g = karate(spark)
+    # pairs of consecutive ids: many clusters have no internal edge, so
+    # they get a placeholder self-loop
+    assign = g.vertex_ids().select(
+        "v", F.floor(F.col("v") / 2).cast("long").alias("comm")
+    )
+    spark_rows = sorted(map(tuple, coarsen(g, assign).edges.collect()))
+
+    a = assign.toPandas().sort_values("v")
+    ids = a["v"].to_numpy(np.int64)
+    comm = a["comm"].to_numpy(np.int64)
+    e = g.edges.toPandas()
+    e_si = np.searchsorted(ids, e["src"].to_numpy(np.int64))
+    e_di = np.searchsorted(ids, e["dst"].to_numpy(np.int64))
+    k = int(comm.max()) + 1
+    ts, td, tw = _coarsen_np(
+        comm, e_si, e_di, e["weight"].to_numpy(np.float64), k
+    )
+    assert sorted(zip(ts.tolist(), td.tolist(), tw.tolist())) == spark_rows
+    assert int((tw != 0.0).sum()) < len(ts)  # placeholders exist
+
+
+def test_local_tail_gate_counts_rows_like_normal_flow(spark, monkeypatch):
+    """After a numpy colored phase, the driver continuation gates its local
+    tail on the coarse row count, placeholders included, as the normal
+    flow's use_local gate counts coarsen()'s rows. With local_threshold at
+    the pair count, below the row count, both flows must send phase 2 to
+    the distributed kernel and agree on the whole run."""
+    from grappolo_spark.operators import coloring as C
+    from grappolo_spark.operators import multiphase as M
+    from grappolo_spark.sources.fixtures import grid2d
+
+    g = grid2d(spark)  # 72 vertices; phase 1 leaves 28 clusters
+
+    def run(local_threshold, captured=None):
+        calls = []
+        kernel, colored = M.louvain_one_phase, C.louvain_one_phase_colored
+
+        def spy(*a, **kw):
+            calls.append(kw.get("thresh"))
+            return kernel(*a, **kw)
+
+        def colored_spy(*a, **kw):
+            res = colored(*a, **kw)
+            if captured is not None and res.local_np is not None:
+                captured.append(res.local_np)
+            return res
+
+        monkeypatch.setattr(M, "louvain_one_phase", spy)
+        monkeypatch.setattr(C, "louvain_one_phase_colored", colored_spy)
+        r = M.louvain(
+            g, max_phases=4, coloring=True, min_graph_size=30,
+            num_colors_cap=8, coloring_algo="multihash",
+            local_threshold=local_threshold,
+        )
+        monkeypatch.setattr(M, "louvain_one_phase", kernel)
+        monkeypatch.setattr(C, "louvain_one_phase_colored", colored)
+        return len(calls), (
+            r.modularity,
+            r.num_clusters,
+            r.phases,
+            r.total_iterations,
+            [
+                (h["phase"], h["modularity"], h["clusters"], h["iterations"],
+                 h.get("vertices"), h["colored"])
+                for h in r.phase_history
+            ],
+            sorted((x["v"], x["comm"]) for x in r.assignment.collect()),
+        )
+
+    # phase 1's coarse table, sized from the numpy continuation's arrays
+    captured = []
+    run(2_000_000, captured)
+    ids_np, comm_raw, e_si, e_di, e_w = captured[0]
+    assign_np, k = M._renumber_np(ids_np, comm_raw)
+    assert k <= 30  # phase 2 runs uncolored
+    ts, _, tw = M._coarsen_np(assign_np, e_si, e_di, e_w, k)
+    pairs = int((tw != 0.0).sum())
+    assert pairs < len(ts)  # placeholders exist: the two counts differ
+
+    calls_np, t_np = run(pairs)
+    monkeypatch.setattr(C, "_NP_CLASS_SWEEP", False)
+    calls_sp, t_sp = run(pairs)
+    monkeypatch.undo()
+    assert calls_np == calls_sp and calls_np >= 1, (calls_np, calls_sp)
+    assert t_np == t_sp
